@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TMP_ROOT = os.environ.get("SPARK_GRAFT_TMP", "/tmp/spark_graft")
@@ -15,6 +15,36 @@ def workdir(sf_dir: str, name: str) -> str:
     d = os.path.join(TMP_ROOT, os.path.basename(os.path.normpath(sf_dir)), name)
     os.makedirs(d, exist_ok=True)
     return d
+
+
+# DataFrames the engine persisted since the last release_tracked().
+_TRACKED: list[DataFrame] = []
+
+
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and record it for ``release_tracked()``.
+
+    The one way engine code caches an intermediate it consumes more
+    than once (a static scan in tests/test_scale_posture.py bans any
+    other). A lazily-returned result cannot unpersist behind itself,
+    so the release happens at the next query's entry
+    (``__spark_entry__``), bounding a sequential sweep to at most one
+    query's caches. Chained sites read ``.transform(tracked_persist)``.
+    """
+    out = df.persist()
+    _TRACKED.append(out)
+    return out
+
+
+def release_tracked() -> None:
+    """Unpersist every tracked DataFrame and forget it. Caches the
+    caller made with a plain ``persist()`` are never on the list."""
+    while _TRACKED:
+        df = _TRACKED.pop()
+        try:
+            df.unpersist()
+        except Exception:  # session gone / already unpersisted
+            pass
 
 
 def money(col: str | Column) -> Column:

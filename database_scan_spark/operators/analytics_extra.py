@@ -35,6 +35,7 @@ from ..operators._helpers import (
     h32,
     money,
     ntile_from_rank,
+    tracked_persist,
     workdir,
 )
 from ..spec import QuerySpec
@@ -1807,7 +1808,7 @@ def analytic_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisting the dimension-sized per-user table keeps those (and
     # the window inputs) from replaying the fact aggregation three
     # times. Session cache contract: released at next query entry.
-    rfm = rfm.persist()
+    rfm = tracked_persist(rfm)
     n = rfm.agg(F.count(F.lit(1)).alias("_n"))
     uid = (F.col("user_id"),)
     g = global_order(rfm, F.col("r_days"), uid, rank_col="_r_rk")

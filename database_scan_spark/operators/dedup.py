@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
-from ._helpers import spread
+from ._helpers import spread, tracked_persist
 
 P31 = 2_147_483_647  # 2^31 - 1, Mersenne prime
 
@@ -171,8 +171,8 @@ def _verified_pairs(sh: DataFrame, candidates: DataFrame) -> DataFrame:
     candidate set is tiny and the shingle table is a bounded blowup
     of the corpus, so persist() — at cluster scale this is the
     checkpoint you'd write before the verification stage anyway."""
-    sh = sh.persist()
-    candidates = candidates.persist()
+    sh = tracked_persist(sh)
+    candidates = tracked_persist(candidates)
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -262,18 +262,23 @@ def dedup_ngram_jaccard(
     when that wins). Both paths produce identical results; the DuckDB
     oracle is always the naive formulation (independent derivation).
 
-    ``shingles`` lets a caller that already materialized the SAME
-    (doc_id, shingle) relation (``_shingle_df`` with the same
-    sample_mod, persisted) share it instead of paying the doc scan +
-    explode a second time (optimization r11, guide §2.4) — the OPH
-    estimator audit is such a caller: its signature pass and this
-    exact audit consume one shingle kernel.
+    ``shingles`` lets a caller that already materialized the
+    (doc_id, shingle) relation (``_shingle_df``, persisted) share it
+    instead of paying the doc scan + explode a second time
+    (optimization r11, guide §2.4) — the OPH estimator audit is such
+    a caller: its signature pass and this exact audit consume one
+    shingle kernel. The relation already carries its doc sample, so
+    passing ``sample_mod`` with it is refused: the two could disagree.
     """
-    sh = (
-        shingles
-        if shingles is not None
-        else _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
-    )
+    if shingles is not None:
+        if sample_mod is not None:
+            raise ValueError(
+                "dedup_ngram_jaccard: shingles= is already sampled; "
+                "do not pass sample_mod with it"
+            )
+        sh = shingles
+    else:
+        sh = tracked_persist(_shingle_df(spark, sf_dir, sample_mod=sample_mod))
     if prefix_filter:
         return _verified_pairs(sh, _prefix_filtered_candidates(sh))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -419,7 +424,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", F.explode("ids").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
-        .persist()
+        .transform(tracked_persist)
     )
     cand_docs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
@@ -1290,7 +1295,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the whole pipeline has an exact SQL oracle. At 100 TB the
     index is the only state the pipeline keeps; appending today's
     bands to it (one partition write) rolls the window forward."""
-    sh = _shingle_df(spark, sf_dir).persist()
+    sh = tracked_persist(_shingle_df(spark, sf_dir))
     is_delta = _h32(F.col("doc_id").cast("string")) % _DELTA_MOD == 0
 
     import os  # noqa: PLC0415
@@ -1303,7 +1308,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(idx_path)
     base_bands = spark.read.parquet(idx_path)
-    delta_bands = _bands_from_shingles(sh.filter(is_delta)).persist()
+    delta_bands = tracked_persist(_bands_from_shingles(sh.filter(is_delta)))
     all_bands = base_bands.unionByName(delta_bands)
     cand = (
         delta_bands.alias("d")
@@ -1559,8 +1564,8 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pair join + the final audit join) and the differing aliases
         # defeat ReuseExchange (measured: 0 reused exchanges, K·n dot
         # products computed 3x; persist takes sf0.1 warm 6.9s -> 5.4s).
-        # Released by the __spark_entry__ cache lifecycle.
-        .persist()
+        # tracked_persist: released at the next query's entry.
+        .transform(tracked_persist)
     )
     v = assigned.select(
         F.col("vec_id"), "embedding", "cluster", "centroid_sim"
@@ -2316,7 +2321,7 @@ def dedup_minhash_oph(
     # signature pass below and the exact-pair ground truth inside
     # dedup_ngram_jaccard consume the same persisted (doc_id, shingle)
     # relation, so the doc scan + split + explode runs once, not twice.
-    sh = _shingle_df(spark, sf_dir, sample_mod=sample_mod).persist()
+    sh = tracked_persist(_shingle_df(spark, sf_dir, sample_mod=sample_mod))
     hv = h32(F.concat(F.lit("oph:"), F.col("shingle")))
     raw = (
         sh.select(
@@ -2349,7 +2354,7 @@ def dedup_minhash_oph(
              + F.expr(f"(packed div {_OPH_PACK})") * _OPH_C).alias("sig"),
         )
     )
-    pairs = dedup_ngram_jaccard(spark, sf_dir, sample_mod=sample_mod, shingles=sh)
+    pairs = dedup_ngram_jaccard(spark, sf_dir, shingles=sh)
     sa = dense.select(F.col("doc_id").alias("doc_a"), "j", F.col("sig").alias("sig_a"))
     sb = dense.select(F.col("doc_id").alias("doc_b"), "j", F.col("sig").alias("sig_b"))
     return (
@@ -2618,16 +2623,16 @@ def dedup_method_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each pair set appears several times in the union plan (its own
     # count, the overlap join, the exact-total denominator); persist
     # so each dedup pipeline executes ONCE, not once per occurrence.
-    ex = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").persist()
+    ex = tracked_persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
     methods = [
         ("exact_jaccard", ex),
         (
             "minhash_lsh",
-            dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").persist(),
+            tracked_persist(dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")),
         ),
         (
             "simhash_h3",
-            dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b").persist(),
+            tracked_persist(dedup_simhash_pairs(spark, sf_dir).select("doc_a", "doc_b")),
         ),
     ]
     ex_n = ex.agg(F.count(F.lit(1)).alias("n_exact"))

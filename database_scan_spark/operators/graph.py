@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
+from ._helpers import tracked_persist
 
 SCALE = 10**12
 N_ITER = 3
@@ -35,7 +36,7 @@ N_ITER = 3
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (damping 0.85, 3 unrolled iterations) on the
     nation trade graph; returns each nation's scaled rank and share."""
-    edges = _trade_edges(spark, sf_dir).persist()
+    edges = tracked_persist(_trade_edges(spark, sf_dir))
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     nodes = load(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
     nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -169,7 +170,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .persist()
+        .transform(tracked_persist)
     )
     e1 = und.select(F.col("a").alias("t_a"), F.col("b").alias("t_b"))
     e2 = und.select(F.col("a").alias("t_b2"), F.col("b").alias("t_c"))
@@ -261,7 +262,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         weighted.withColumn("rn", rn)
         .filter(F.col("rn") <= BFS_FANOUT)
         .select("src", "dst")
-        .persist()
+        .transform(tracked_persist)
     )
     nation = load(spark, sf_dir, "nation")
     dist = nation.filter(F.col("n_nationkey") == BFS_SEED).select(
@@ -384,7 +385,7 @@ def _sparsified_pairs(spark: SparkSession, sf_dir: str):
         )
         .groupBy("a", "b")
         .agg(F.sum("w").alias("w"))
-        .persist()
+        .transform(tracked_persist)
     )
     dirs = (
         pairs.select("a", "b", "w")
@@ -449,7 +450,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-        .persist()
+        .transform(tracked_persist)
     )
     nodes = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node")
@@ -607,7 +608,7 @@ def _linkpred_build(spark: SparkSession, sf_dir: str):
     _pairs, kept = _sparsified_pairs(spark, sf_dir)
     return kept.select("a", "b").unionByName(
         kept.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst")).persist()
+    ).select(F.col("a").alias("src"), F.col("b").alias("dst")).transform(tracked_persist)
 
 
 def graph_link_prediction_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,7 +770,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights, promote the two sums to DECIMAL(38,0) — shape
     unchanged). Iterations run on the ≤ nations² edge relation; the
     fact-scale work is the ONE edge-building aggregate."""
-    edges = _trade_edges(spark, sf_dir).persist()
+    edges = tracked_persist(_trade_edges(spark, sf_dir))
     nodes = load(spark, sf_dir, "nation").select(F.col("n_nationkey").alias("node"))
     hubs = nodes.select("node", F.lit(SCALE).cast("bigint").alias("h"))
     auth = None
@@ -920,7 +921,7 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WALK_STEPS unrolled joins — without the cache the single-scan
     # posture rests on ReuseExchange unifying 3 identical fact-agg
     # subtrees, which AQE re-optimization is not guaranteed to keep
-    nbr = ranked.join(degree, "src").persist()
+    nbr = tracked_persist(ranked.join(degree, "src"))
     walk = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("start")
     ).withColumn("cur", F.col("start"))
@@ -1036,7 +1037,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges_w.withColumn("rk", F.row_number().over(w_rk))
         .filter(F.col("rk") <= _SCC_TOPK)
         .select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .persist()
+        .transform(tracked_persist)
     )
     nodes = (
         load(spark, sf_dir, "nation")
@@ -1158,7 +1159,7 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per radius t: pairs reached, newly reached pairs, and the
     reached fraction in ppm — the curve whose 90% crossing is the
     effective diameter."""
-    edges = _trade_edges(spark, sf_dir).select("src", "dst").persist()
+    edges = tracked_persist(_trade_edges(spark, sf_dir).select("src", "dst"))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -1207,7 +1208,7 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "node",
                 F.col("ball").bitwiseOR(F.coalesce("nbr_ball", F.lit(0))).alias("ball"),
             )
-            .persist()
+            .transform(tracked_persist)
         )
         rows.append(
             balls.agg(
@@ -1314,7 +1315,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     set' curation signal. Plan shape identical to graph_pagerank:
     edges built once and persisted, per-round broadcast joins on the
     bounded node/edge relations."""
-    edges = _trade_edges(spark, sf_dir).persist()
+    edges = tracked_persist(_trade_edges(spark, sf_dir))
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     nation = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"), "n_name", "n_regionkey"

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
-from ._helpers import h32, spread
+from ._helpers import h32, spread, tracked_persist
 
 # Chunking geometry: windows of CHUNK whitespace tokens starting every
 # STRIDE tokens (CHUNK-STRIDE token overlap), runt tail chunks dropped
@@ -368,7 +368,7 @@ def analytic_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deliberately NOT persisted: the distinct basket table feeds four
     consumers, but its shuffle output is identical for all of them,
     so Spark's ReuseExchange serves every branch from ONE
-    materialized exchange — while an explicit .persist() replaces
+    materialized exchange — while an explicit tracked_persist replaces
     that with an InMemoryRelation whose columnar cache scans block
     whole-stage codegen fusion and AQE stage reuse (measured at
     sf0.01/local[8]: 26-37 s cached vs 0.7-1.2 s uncached, a 30x
@@ -1880,7 +1880,7 @@ def text_ccnet_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and window input would otherwise each replay the
     # expensive token-stream joins (session cache contract: released
     # at next query entry)
-    out = out.persist()
+    out = tracked_persist(out)
     n_docs = out.agg(F.count(F.lit(1)).alias("_n"))
     g = global_order(
         out,

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..operators._helpers import global_order
+from ..operators._helpers import global_order, tracked_persist
 from ..spec import QuerySpec
 
 
@@ -380,7 +380,7 @@ def dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: j feeds both the MAD aggregate and the flagging pass;
     # uncached, each action's lineage re-scans events (and recomputes
     # med inside it) — five passes where the docstring promises three
-    j = ev.join(F.broadcast(med), "event_type").persist()
+    j = tracked_persist(ev.join(F.broadcast(med), "event_type"))
     mad = j.groupBy("event_type").agg(
         F.expr("percentile(abs(value - med), 0.5)").alias("mad")
     )
@@ -709,9 +709,11 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no subexpressions across DataFrame branches — without the
         # cache one action scans customer+dims ~6x, not once as the
         # docstring promises
-        .persist()
+        .transform(tracked_persist)
     )
-    l0 = recs.groupBy("s", "nat", "b0").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    l0 = tracked_persist(
+        recs.groupBy("s", "nat", "b0").agg(F.count(F.lit(1)).alias("cnt"))
+    )
     keep0 = l0.filter(F.col("cnt") >= K_ANON).select(
         F.lit(0).alias("level"),
         F.col("s").alias("segment"),
@@ -720,8 +722,10 @@ def wf_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("class_size"),
     )
     v0 = l0.filter(F.col("cnt") < K_ANON).select("s", "nat", "b0")
-    r1 = recs.join(v0, ["s", "nat", "b0"], "left_semi").persist()
-    l1 = r1.groupBy("s", "rg", "b1").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    r1 = tracked_persist(recs.join(v0, ["s", "nat", "b0"], "left_semi"))
+    l1 = tracked_persist(
+        r1.groupBy("s", "rg", "b1").agg(F.count(F.lit(1)).alias("cnt"))
+    )
     keep1 = l1.filter(F.col("cnt") >= K_ANON).select(
         F.lit(1).alias("level"),
         F.col("s").alias("segment"),
@@ -1785,7 +1789,7 @@ def dq_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pairs (near-dup-sized) is the broadcast side; persisted because
     # both tag joins probe it and the generation is the expensive leg
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").persist()
+    pairs = tracked_persist(dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"))
     half = tags.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     ).join(F.broadcast(pairs), "doc_a")

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
-from ._helpers import h32 as _h32, spread
+from ._helpers import h32 as _h32, spread, tracked_persist
 
 DIM = 64
 N_QUERIES = 8  # vec_id < 8 are the query vectors
@@ -548,7 +548,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    emb = emb.persist()
+    emb = tracked_persist(emb)
     centroids = emb.filter(F.col("vec_id") < K_SEEDS).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("embedding").alias("c_arr")
     )
@@ -2053,7 +2053,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nlabel",
             F.round(_dot(F.col("qe"), F.col("ne")), 6).alias("sim"),
         )
-        .persist()
+        .transform(tracked_persist)
     )
     pos = (
         scored.filter(F.col("nlabel") == F.col("qlabel"))
@@ -2143,7 +2143,7 @@ def sim_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim_topk_bruteforce(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .distinct()
-        .persist()
+        .transform(tracked_persist)
     )
     methods = [
         ("ivf_flat", sim_ivf_flat),

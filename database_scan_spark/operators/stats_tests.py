@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
+from ._helpers import tracked_persist
 
 SPECS: list[QuerySpec] = []
 
@@ -509,7 +510,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     )
-    edges = li.distinct().persist()
+    edges = tracked_persist(li.distinct())
     stats = []
     cur = edges
     for rnd in range(1, _KCORE_ROUNDS + 1):
@@ -520,7 +521,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = (
             cur.join(keep_p, "p", "left_semi")
             .join(keep_s, "s", "left_semi")
-            .persist()
+            .transform(tracked_persist)
         )
         stats.append(
             cur.agg(
@@ -621,7 +622,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    F.col("n_regionkey").alias("dst_reg"))),
             "dst",
         )
-        .persist()
+        .transform(tracked_persist)
     )
     m = edges.agg(F.sum("w").alias("m"))
     intra = (
@@ -747,7 +748,7 @@ def analytic_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("q"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("d"),
     )
-    joint = li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    joint = tracked_persist(li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("cnt")))
     a = joint.select(
         F.col("q").alias("qa"), F.col("d").alias("da"), F.col("cnt").alias("ca")
     )
@@ -2798,7 +2799,7 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
+        .transform(tracked_persist)
     )
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w").alias("w_rev")
@@ -2949,7 +2950,7 @@ def analytic_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wk"),
         )
         .distinct()
-        .persist()
+        .transform(tracked_persist)
     )
     w = Window.partitionBy("user_id").orderBy("wk")
     tagged = uw.select(
@@ -3169,14 +3170,14 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
+        .transform(tracked_persist)
     )
     med = wpairs.agg(F.expr("percentile(w, 0.5)").alias("m"))
     edges = (
         wpairs.crossJoin(F.broadcast(med))
         .filter(F.col("w") >= F.col("m"))
         .select("a", "b")
-        .persist()
+        .transform(tracked_persist)
     )
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -3299,7 +3300,7 @@ def analytic_retention_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wk"),
         )
         .distinct()
-        .persist()
+        .transform(tracked_persist)
     )
     cohort = uw.groupBy("user_id").agg(F.min("wk").alias("c0"))
     maxwk = uw.agg(F.max("wk").alias("max_wk"))

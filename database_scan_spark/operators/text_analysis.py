@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..spec import QuerySpec
+from ._helpers import tracked_persist
 
 STOPWORDS = ["the", "a", "of", "to", "and", "is", "in", "it"]
 
@@ -1060,7 +1061,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured: 3 identical Exchange+Window chains, one per scan).
     # One tracked persist computes it once; released by the
     # __spark_entry__ cache lifecycle.
-    occ = seg.select("doc_id", "phrase_id", "pos", "w").persist()
+    occ = tracked_persist(seg.select("doc_id", "phrase_id", "pos", "w"))
     plen = occ.groupBy("doc_id", "phrase_id").agg(F.count(F.lit(1)).alias("plen"))
     wstat = (
         occ.join(plen, ["doc_id", "phrase_id"])
@@ -1688,7 +1689,7 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("sh"),
-    ).persist()
+    ).transform(tracked_persist)
     df_ = shingles.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         shingles.join(df_, "sh")
@@ -1958,7 +1959,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("sh"),
-    ).persist()
+    ).transform(tracked_persist)
     first = shingles.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     scored = (
         shingles.join(first, "sh")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._helpers import tracked_persist
 from ..operators.dedup import JACCARD_THRESHOLD, dedup_ngram_jaccard
 from ..operators.text_analysis import text_quality as text_quality_fn
 from ..spec import QuerySpec
@@ -77,14 +78,14 @@ def dedup_cluster_cc(
     # pure plan-time at sf0.1 and an explainString OOM at 100x.
     # localCheckpoint truncates the lineage itself (graph_scc's
     # pattern); the shallow exact-join plan stays on plain persist.
-    edges = edges.localCheckpoint(eager=False) if lsh_pairs else edges.persist()
+    edges = edges.localCheckpoint(eager=False) if lsh_pairs else tracked_persist(edges)
     labels_p = (
         edges.groupBy("src")
         .agg(
             F.least(F.col("src"), F.min("dst")).alias("label"),
             (F.min("dst") < F.col("src")).alias("chg"),
         )
-        .persist()
+        .transform(tracked_persist)
     )
     # Round 1 needs NO convergence count (optimization r11, guide §5
     # "the driver should do almost no data work" — one action fewer):
@@ -120,7 +121,7 @@ def dedup_cluster_cc(
                     < F.min(F.when(F.col("is_self") == 1, F.col("label")))
                 ).alias("chg"),
             )
-            .persist()
+            .transform(tracked_persist)
         )
         changed = new_p.filter("chg").count()
         labels_p.unpersist()

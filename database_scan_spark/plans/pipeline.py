@@ -5,7 +5,7 @@ from disk instead of recrawling (`load_from_files=True` —
 `/root/reference/x2.2.py:249-256,341-406`). Spark-first: each stage
 is written once as parquet into a deterministic stage directory; a
 resumed run re-reads the checkpoint instead of recomputing the
-lineage. (Intra-job, `df.persist()`/`checkpoint()` fill the same
+lineage. (Intra-job, `tracked_persist`/`checkpoint()` fill the same
 role; the on-disk form is what survives process death — the crash
 recovery a 100 TB crawl actually needs.)
 

@@ -44,7 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce/re-plan persisted intermediates too (off by
-        # default; without it every .persist() pins its pre-AQE
+        # default; without it every persisted frame pins its pre-AQE
         # partitioning and tiny cached stages keep 32 tasks each)
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

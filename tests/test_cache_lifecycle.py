@@ -1,11 +1,11 @@
 """Session cache lifecycle at the driver contract boundary.
 
-VERDICT r4 "persist hygiene": operators persist() intermediates and
-cannot unpersist behind their own lazily-returned result, so the
-lifetime contract is session-level — `__spark_entry__.queries()`
-releases the previous query's engine-tracked persists on each query's
-entry, bounding a sequential sweep to at most one query's cached
-relations (SCALE.md "Cache lifecycle").
+VERDICT r4 "persist hygiene": operators cache intermediates through
+``tracked_persist`` and cannot unpersist behind their own
+lazily-returned result, so the lifetime contract is session-level —
+each `__spark_entry__.queries()` entry releases the tracked caches of
+the previous query, bounding a sequential sweep to at most one query's
+cached relations (SCALE.md "Cache lifecycle").
 
 ADVICE r5 upgrade: the release is TRACKED, not `clearCache()` — a
 cache the CALLER created (e.g. a pre-cached input table) must survive
@@ -100,196 +100,6 @@ def test_caller_caches_survive_engine_queries(spark):
     spark.catalog.clearCache()
 
 
-def test_persist_intercept_is_scoped(spark):
-    """DataFrame.persist is intercepted only WHILE an engine query
-    builds its plan — after queries() returns, a caller persist must
-    not be tracked (and so must survive the next engine entry)."""
-    from pyspark.sql import DataFrame
-
-    from database_scan_spark.catalog import load
-
-    qs = entry_mod.queries()
-    orig = DataFrame.persist
-    qs[_NEXT](spark, SF).count()
-    assert DataFrame.persist is orig, (
-        "persist intercept leaked past the query-construction scope"
-    )
-    # A caller persist made now must not enter the engine's tracked set.
-    before = list(entry_mod._ENGINE_PERSISTS)
-    caller_df = load(spark, SF, "region").persist()
-    assert len(entry_mod._ENGINE_PERSISTS) == len(before)
-    caller_df.unpersist()
-    spark.catalog.clearCache()
-
-
-def test_second_thread_persist_during_build_is_not_tracked(spark):
-    """The persist intercept is class-global while a query builds, but
-    attribution is THREAD-scoped (VERDICT r6): a persist issued by a
-    different thread mid-build is a caller cache — never recorded, so
-    never drained by the next engine entry."""
-    import threading
-
-    from database_scan_spark.catalog import load
-
-    spark.catalog.clearCache()
-    entry_mod._ENGINE_PERSISTS.clear()
-    caller_holder: list = []
-
-    def caller_thread() -> None:
-        caller_holder.append(load(spark, SF, "region").persist())
-
-    def engine_fn(s, sf):
-        df = load(s, sf, "nation").persist()  # engine-owned: tracked
-        t = threading.Thread(target=caller_thread)
-        t.start()
-        t.join()
-        return df
-
-    wrapped = entry_mod._released(engine_fn)
-    wrapped(spark, SF).count()
-    caller_df = caller_holder[0]
-    tracked_ids = {id(d) for d in entry_mod._ENGINE_PERSISTS}
-    assert id(caller_df) not in tracked_ids, (
-        "a second thread's persist during the build window was "
-        "attributed to the engine"
-    )
-    assert len(entry_mod._ENGINE_PERSISTS) == 1  # the engine's own
-    # The next engine entry drains only the engine persist.
-    caller_df.count()
-    entry_mod._released(lambda s, sf: load(s, sf, "nation"))(spark, SF)
-    assert caller_df.storageLevel.useMemory, (
-        "next engine entry unpersisted the second thread's caller cache"
-    )
-    caller_df.unpersist()
-    spark.catalog.clearCache()
-
-
-def test_nested_wrapped_call_does_not_drain_outer_caches(spark):
-    """ADVICE r6 reentrancy: a wrapped query invoking another wrapped
-    query must not drain the outer query's live persists mid-build,
-    and must not double-wrap persist."""
-    from pyspark.sql import DataFrame
-
-    from database_scan_spark.catalog import load
-
-    spark.catalog.clearCache()
-    entry_mod._ENGINE_PERSISTS.clear()
-    orig_persist = DataFrame.persist
-
-    inner = entry_mod._released(lambda s, sf: load(s, sf, "region"))
-
-    def outer_fn(s, sf):
-        live = load(s, sf, "nation").persist()
-        live.count()  # materialize so an unpersist would be observable
-        assert live.storageLevel.useMemory
-        inner_df = inner(s, sf)  # nested wrapped call: passthrough
-        assert live.storageLevel.useMemory, (
-            "nested entry drained the outer query's live cache"
-        )
-        return live.join(
-            inner_df, live["n_regionkey"] == inner_df["r_regionkey"]
-        ).select("n_name", "r_name")
-
-    out = entry_mod._released(outer_fn)(spark, SF)
-    assert out.count() > 0
-    assert DataFrame.persist is orig_persist, "persist left double-wrapped"
-    assert entry_mod._BUILD_OWNER is None
-    # A fresh entry still drains normally afterwards.
-    entry_mod._released(lambda s, sf: load(s, sf, "nation"))(spark, SF)
-    assert len(entry_mod._ENGINE_PERSISTS) == 0
-    spark.catalog.clearCache()
-
-
-def test_concurrent_wrapped_entry_fails_loud(spark):
-    """Two threads inside wrapped queries at once is a contract
-    violation the drain step cannot survive silently — assert it."""
-    import threading
-
-    from database_scan_spark.catalog import load
-
-    errors: list = []
-
-    def other_query() -> None:
-        try:
-            entry_mod._released(lambda s, sf: load(s, sf, "region"))(spark, SF)
-        except RuntimeError as exc:
-            errors.append(exc)
-
-    def blocking_fn(s, sf):
-        t = threading.Thread(target=other_query)
-        t.start()
-        t.join()
-        return load(s, sf, "nation")
-
-    entry_mod._released(blocking_fn)(spark, SF)
-    assert len(errors) == 1 and "sequentially" in str(errors[0])
-    assert entry_mod._BUILD_OWNER is None
-
-
-def test_cache_call_is_tracked_like_persist(spark):
-    """ADVICE r6: classic DataFrame.cache() does not route through
-    persist() — it must be intercepted too, or a future .cache()-ing
-    operator silently escapes the release contract."""
-    from database_scan_spark.catalog import load
-
-    spark.catalog.clearCache()
-    entry_mod._ENGINE_PERSISTS.clear()
-
-    def caching_fn(s, sf):
-        df = load(s, sf, "nation").cache()
-        df.count()
-        return df
-
-    cached = entry_mod._released(caching_fn)(spark, SF)
-    assert len(entry_mod._ENGINE_PERSISTS) == 1, (
-        ".cache() inside a query build was not tracked"
-    )
-    assert cached.storageLevel.useMemory
-    # Next entry releases it.
-    entry_mod._released(lambda s, sf: load(s, sf, "region"))(spark, SF)
-    assert not cached.storageLevel.useMemory, (
-        "tracked .cache() was not released on the next entry"
-    )
-    spark.catalog.clearCache()
-
-
-def test_no_plan_builder_spawns_threads():
-    """Threaded-builder canary (ADVICE r7): the persist/cache
-    intercept attributes a persist to the engine only when it is
-    issued on the BUILDING thread's ident, so a plan builder that
-    spawned worker threads would leak any persist those workers issue
-    (untracked → never released → cross-query cache leak). The
-    single-threaded-build assumption is documented in _released's
-    docstring; this test makes it mechanical: no non-vendored engine
-    source may spawn threads during plan construction. If a threaded
-    builder ever lands, it must register its worker idents with the
-    intercept first — then extend this allowlist."""
-    import glob as g
-    import os
-    import re
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "database_scan_spark",
-    )
-    spawn = re.compile(
-        r"threading\.Thread\(|ThreadPoolExecutor\(|start_new_thread\("
-    )
-    offenders = []
-    for path in g.glob(os.path.join(root, "**", "*.py"), recursive=True):
-        if os.sep + "_vendor" + os.sep in path:
-            continue  # vendored protobuf runtime: no engine persists
-        with open(path) as fh:
-            for lineno, line in enumerate(fh, 1):
-                if spawn.search(line):
-                    offenders.append(f"{os.path.relpath(path, root)}:{lineno}")
-    assert not offenders, (
-        "plan-builder thread spawn found — persists from spawned "
-        "threads are untracked by the __spark_entry__ intercept "
-        f"(see _released docstring): {offenders}"
-    )
-
-
 def test_drain_releases_between_queries(spark):
     """bench.py's out-of-band drain (ADVICE r9): calling
     ``__spark_entry__.drain()`` between queries releases the previous
@@ -304,4 +114,45 @@ def test_drain_releases_between_queries(spark):
     # idempotent when idle
     entry_mod.drain()
     assert qs[_NEXT](spark, SF).count() > 0
+    spark.catalog.clearCache()
+
+
+def test_cache_call_is_tracked_like_persist(spark):
+    """ADVICE r6: a cached intermediate must not escape the release
+    contract. Engine code caches only through ``tracked_persist`` (the
+    static scan in test_scale_posture bans bare ``.cache()`` and
+    ``.persist()``), so ``tracked_persist`` must cache at the same
+    storage level as ``.cache()`` — swapping it in changes no plan —
+    and the next entry must release what it cached."""
+    from database_scan_spark.catalog import load
+    from database_scan_spark.operators import _helpers
+
+    spark.catalog.clearCache()
+    entry_mod.drain()
+
+    def caching_fn(s, sf):
+        df = _helpers.tracked_persist(load(s, sf, "nation"))
+        df.count()
+        return df
+
+    cached = entry_mod._released(caching_fn)(spark, SF)
+    assert len(_helpers._TRACKED) == 1, (
+        "a cache made inside a query build was not tracked"
+    )
+    # A different table: Spark shares one cache entry per plan.
+    caller_df = load(spark, SF, "region").cache()
+    assert cached.storageLevel == caller_df.storageLevel, (
+        "tracked_persist caches at a different level than .cache()"
+    )
+    assert cached.storageLevel.useMemory
+    # Next entry releases the tracked cache, not the caller's.
+    entry_mod._released(lambda s, sf: load(s, sf, "region"))(spark, SF)
+    assert not cached.storageLevel.useMemory, (
+        "tracked cache was not released on the next entry"
+    )
+    assert caller_df.storageLevel.useMemory, (
+        "next entry released a caller's .cache()"
+    )
+    assert len(_helpers._TRACKED) == 0
+    caller_df.unpersist()
     spark.catalog.clearCache()

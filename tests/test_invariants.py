@@ -425,12 +425,15 @@ def test_mmr_barrier_survives_optimizer(spark, specs):
     measurement in similarity.py — hang the analyzer. Build the
     optimized plan in a BOUNDED worker thread so that failure mode is
     a loud assert, not a hung test, and require the per-step Generate
-    barriers to still be present."""
+    barriers to still be present. The plan is built on its own
+    ``newSession()``, so a wedged optimizer thread left behind by a
+    timeout holds that session's analyzer state, not the shared one
+    (ADVICE r11)."""
     import threading
 
     from database_scan_spark.operators.similarity import MMR_K
 
-    df = specs["sim_mmr_rerank"].fn(spark, SF_SMOKE)
+    df = specs["sim_mmr_rerank"].fn(spark.newSession(), SF_SMOKE)
     result: dict[str, str] = {}
 
     def build() -> None:

@@ -262,3 +262,13 @@ def test_dsir_null_lang_parity(spark, tmp_path):
     assert n_null > 0, "fixture mutation produced no NULL langs"
     pdf = wf_dsir_select(spark, str(fix)).toPandas()
     assert_match(pdf, run_oracle(WF_DSIR_SELECT_ORACLE, str(fix)), "wf_dsir_select/null-lang")
+
+
+def test_ngram_jaccard_refuses_shingles_with_sample_mod(spark):
+    """A shared shingle relation already carries its doc sample, so a
+    sample_mod passed beside it could silently disagree (ADVICE r11)."""
+    from database_scan_spark.operators.dedup import dedup_ngram_jaccard
+
+    shingles = spark.range(1).selectExpr("id AS doc_id", "'a b' AS shingle")
+    with pytest.raises(ValueError, match="sample_mod"):
+        dedup_ngram_jaccard(spark, SF_SMOKE, sample_mod=4, shingles=shingles)

@@ -72,17 +72,21 @@ def test_whole_stage_codegen_in_agg(spark):
 def test_operators_never_collect():
     """No operator may pull data to the driver: static scan of the
     operator/plan modules for driver-side materialization in the
-    hot path (SURVEY §7.2 phase 5 convention)."""
+    hot path (SURVEY §7.2 phase 5 convention). The same scan bans a
+    direct persist/cache: engine caches go through
+    ``_helpers.tracked_persist`` so the next query's entry releases
+    them (SCALE.md "Cache lifecycle")."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent / "database_scan_spark"
     banned = (".collect(", ".toPandas(", ".toLocalIterator(")
+    untracked = (".persist(", ".cache(")
     offenders = []
     for py in root.rglob("*.py"):
         if py.name == "testing.py":
             continue  # the harness legitimately materializes results
         src = py.read_text()
-        for b in banned:
+        for b in banned + (() if py.name == "_helpers.py" else untracked):
             if b in src:
                 offenders.append(f"{py.name}: {b}")
     assert not offenders, offenders

@@ -85,6 +85,9 @@ def main() -> None:
     if args.cpus is not None:
         child(args.cpus, args.sf_dir)
         return
+    if len(args.core_counts) < 2:
+        ap.error("--core-counts needs at least 2 values to compare, "
+                 f"got {args.core_counts}")
 
     results: dict[str, dict[str, float]] = {}
     for cpus in args.core_counts:

@@ -12,7 +12,9 @@ actions per round, shallower lineage); queries whose exec dominates
 need plan work (shuffles, joins, Python boundary).
 
 Usage: python tools/profile_breakdown.py [name ...]   # default: all
-Writes tools/profile_breakdown.json.
+A full run writes tools/profile_breakdown.json; a run over named
+headliners only prints, so a subset never overwrites the full table.
+A name that is not a headliner exits non-zero.
 """
 
 from __future__ import annotations
@@ -28,16 +30,20 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     only = set(sys.argv[1:])
+    from bench import EXTRA_CONFS, HEADLINE
+
+    unknown = sorted(only - set(HEADLINE))
+    if unknown:
+        sys.exit(f"profile_breakdown: not headliners: {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from database_scan_spark.session import get_spark
 
     spark = get_spark("database-scan-spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as _entry
-    from bench import EXTRA_CONFS, HEADLINE
 
     by_name = _entry.queries()
-    names = [n for n in HEADLINE if n in by_name and (not only or n in only)]
+    names = [n for n in HEADLINE if not only or n in only]
 
     def one(name: str) -> tuple[float, float]:
         extra = EXTRA_CONFS.get(name, {})
@@ -77,9 +83,10 @@ def main() -> None:
             f"exec={out[name]['exec']:7.3f}  {name}",
             flush=True,
         )
-    with open(os.path.join(REPO, "tools", "profile_breakdown.json"), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    if not only:
+        with open(os.path.join(REPO, "tools", "profile_breakdown.json"), "w") as fh:
+            json.dump(out, fh, indent=1, sort_keys=True)
+            fh.write("\n")
     tot = sum(v["total"] for v in out.values())
     b = sum(v["build"] for v in out.values())
     print(f"TOTAL {tot:.1f}s  build {b:.1f}s  exec {tot - b:.1f}s")
